@@ -11,13 +11,31 @@ import graft.cli.GraftCli
   */
 class GraftCliSpec extends AnyFunSuite {
   private lazy val spark = TestSpark.spark
-  private lazy val storeDir =
-    Files.createTempDirectory("graft-cli-store").toString
+
+  /** One raw docket record in the reference's input shape (S.D.N.Y.). */
+  private def docket(cn: String, text: String): String =
+    s"""{"case_number":"$cn","court":"S.D.N.Y.","title":"t $cn",
+       |"filed_date":"2023-03-15","parties":"P One (plaintiff); D Two (defendant)",
+       |"case_type":"civil","judge":"Hon. A B","docket_text":"$text",
+       |"status":"active"}""".stripMargin.replaceAll("\n", "")
+
+  /** A fresh store dir after `ingest` of an inline batch of dockets. */
+  private def ingestedStore(prefix: String, cns: String*): String = {
+    val dir = Files.createTempDirectory(prefix).toString
+    val batch = Files.createTempFile(prefix, ".json")
+    Files.writeString(batch, cns.map(cn => docket(cn, s"$cn docket body"))
+      .mkString("[", ",", "]"))
+    assert(GraftCli.dispatch(spark,
+      Array("ingest", batch.toString, "--store", dir)) == 0)
+    dir
+  }
 
   test("ingest → backfill → report → query flows") {
+    ReferenceCorpus.assumePresent()
+    val storeDir = Files.createTempDirectory("graft-cli-store").toString
     val store = Array("--store", storeDir)
     assert(GraftCli.dispatch(spark,
-      Array("ingest", "/root/reference/data/raw_dockets.json") ++ store) == 0)
+      Array("ingest", ReferenceCorpus.path) ++ store) == 0)
     assert(GraftCli.dispatch(spark, Array("backfill") ++ store) == 0)
     // report gate: corpus has 57/501 ≈ 11.4% missing judges → exit 1
     // (the reference's >10% completeness gate fires on its own corpus)
@@ -34,6 +52,8 @@ class GraftCliSpec extends AnyFunSuite {
   }
 
   test("registerViews exposes the store to ad-hoc SQL") {
+    val storeDir = ingestedStore("graft-cli-views", "1:23-cv-00001",
+      "1:23-cv-00002")
     val store = new graft.store.SnapshotStore(spark, storeDir)
     val views = store.registerViews()
     assert(views.contains("cases") && views.contains("courts"))
@@ -46,9 +66,13 @@ class GraftCliSpec extends AnyFunSuite {
   }
 
   test("second ingest of the same file classifies as updates") {
+    ReferenceCorpus.assumePresent()
+    val storeDir = Files.createTempDirectory("graft-cli-reingest").toString
     val store = Array("--store", storeDir)
     assert(GraftCli.dispatch(spark,
-      Array("ingest", "/root/reference/data/raw_dockets.json") ++ store) == 0)
+      Array("ingest", ReferenceCorpus.path) ++ store) == 0)
+    assert(GraftCli.dispatch(spark,
+      Array("ingest", ReferenceCorpus.path) ++ store) == 0)
     val runs = new graft.store.SnapshotStore(spark, storeDir)
       .read("ingest_runs").get.orderBy("run_id").collect()
     assert(runs.length == 2)
@@ -59,7 +83,10 @@ class GraftCliSpec extends AnyFunSuite {
 
   test("forget expunges a docket and vacuums; get returns 404 after") {
     import org.apache.spark.sql.functions.{col, trim}
+    val storeDir = ingestedStore("graft-cli-forget", "1:23-cv-12345",
+      "1:23-cv-00002")
     val storeArgs = Array("--store", storeDir)
+    assert(GraftCli.dispatch(spark, Array("backfill") ++ storeArgs) == 0)
     assert(GraftCli.dispatch(spark,
       Array("get", "1:23-cv-12345") ++ storeArgs) == 0)
     // the victim also FAILS an ingest (null filed_date → BAD_DATE), so
@@ -155,11 +182,6 @@ class GraftCliSpec extends AnyFunSuite {
     import org.apache.spark.sql.functions.col
     val dir = Files.createTempDirectory("graft-cli-chain").toString
     val st = Array("--store", dir)
-    def docket(cn: String, text: String): String =
-      s"""{"case_number":"$cn","court":"S.D.N.Y.","title":"t $cn",
-         |"filed_date":"2023-03-15","parties":"P One (plaintiff); D Two (defendant)",
-         |"case_type":"civil","judge":"Hon. A B","docket_text":"$text",
-         |"status":"active"}""".stripMargin.replaceAll("\n", "")
     val f1 = Files.createTempFile("graft-chain-1", ".json")
     Files.writeString(f1,
       s"[${docket("C-1", "alpha litigation body")},${docket("C-2", "beta litigation body")}]")

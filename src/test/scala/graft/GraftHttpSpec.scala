@@ -21,7 +21,7 @@ class GraftHttpSpec extends AnyFunSuite {
   private lazy val server = {
     import org.apache.spark.sql.functions.{coalesce, col, lit}
     val ingest = IngestJob.run(spark,
-      IngestJob.readRaw(spark, "/root/reference/data/raw_dockets.json"),
+      IngestJob.readRaw(spark, ReferenceCorpus.path),
       1, "raw_dockets.json", "ref", Timestamp.valueOf("2026-01-01 00:00:00"))
     val embedder = HashingEmbedder(64)
     val embeddings = RagPipeline.backfill(ingest.cases, None, embedder)
@@ -56,12 +56,14 @@ class GraftHttpSpec extends AnyFunSuite {
       HttpResponse.BodyHandlers.ofString())
 
   test("GET /health") {
+    ReferenceCorpus.assumePresent()
     val r = get("/health")
     assert(r.statusCode() == 200)
     assert(mapper.readTree(r.body()).path("status").asText() == "ok")
   }
 
   test("GET /cases?year= returns summaries; missing filters → 400; bad year → 422") {
+    ReferenceCorpus.assumePresent()
     val ok = get("/cases?year=2023")
     assert(ok.statusCode() == 200)
     val arr = mapper.readTree(ok.body())
@@ -79,6 +81,7 @@ class GraftHttpSpec extends AnyFunSuite {
   }
 
   test("GET /cases/{case_number}: detail with parties; unknown → 404") {
+    ReferenceCorpus.assumePresent()
     val r = get("/cases/1:23-cv-12345")
     assert(r.statusCode() == 200)
     val d = mapper.readTree(r.body())
@@ -96,6 +99,7 @@ class GraftHttpSpec extends AnyFunSuite {
   }
 
   test("POST /cases/search: top-k results; validation → 422") {
+    ReferenceCorpus.assumePresent()
     val r = post("/cases/search", """{"query":"breach of contract","limit":3}""")
     assert(r.statusCode() == 200)
     val arr = mapper.readTree(r.body())
@@ -109,6 +113,7 @@ class GraftHttpSpec extends AnyFunSuite {
 
   test("POST /search/keyword and /search/bm25: stored-index hits with " +
     "case numbers; validation → 422") {
+    ReferenceCorpus.assumePresent()
     for (route <- Seq("/search/keyword", "/search/bm25")) {
       val r = post(route, """{"terms":["breach","contract"],"limit":5}""")
       assert(r.statusCode() == 200, s"$route: ${r.body()}")
@@ -132,6 +137,7 @@ class GraftHttpSpec extends AnyFunSuite {
 
   test("POST /search/phrase: positional adjacency over the stored " +
     "index; validation → 422") {
+    ReferenceCorpus.assumePresent()
     val r = post("/search/phrase", """{"phrase":"breach of contract","limit":10}""")
     assert(r.statusCode() == 200, r.body())
     val arr = mapper.readTree(r.body())
@@ -151,6 +157,7 @@ class GraftHttpSpec extends AnyFunSuite {
 
   test("POST /search/hybrid: case-level BM25 + dense RRF, both legs " +
     "stored-index probes; validation → 422") {
+    ReferenceCorpus.assumePresent()
     val r = post("/search/hybrid", """{"query":"breach of contract","limit":5}""")
     assert(r.statusCode() == 200, r.body())
     val arr = mapper.readTree(r.body())
@@ -172,6 +179,7 @@ class GraftHttpSpec extends AnyFunSuite {
 
   test("POST /search/ann + filtered /search/hybrid: the equality-filter " +
     "object narrows to matching cases; unknown fields/values → 422") {
+    ReferenceCorpus.assumePresent()
     def caseDetail(cn: String) = mapper.readTree(
       get("/cases/" + java.net.URLEncoder.encode(cn, "UTF-8")).body())
     val r = post("/search/ann",
@@ -214,6 +222,7 @@ class GraftHttpSpec extends AnyFunSuite {
   }
 
   test("unknown route → 404 error body") {
+    ReferenceCorpus.assumePresent()
     val r = get("/nope")
     assert(r.statusCode() == 404)
     assert(mapper.readTree(r.body()).has("error"))
@@ -221,6 +230,7 @@ class GraftHttpSpec extends AnyFunSuite {
 
   test("concurrent soak: parallel mixed requests through the fixed " +
       "pool get isolated, correct responses") {
+    ReferenceCorpus.assumePresent()
     // every case number in the corpus, each with a validator that only
     // ITS OWN response satisfies — a cross-request bleed (shared
     // mutable state anywhere in server → api → Spark collect) would

@@ -19,11 +19,12 @@ class IngestJobSpec extends AnyFunSuite {
   private val ts = Timestamp.valueOf("2026-01-01 00:00:00")
 
   private lazy val result = IngestJob.run(spark,
-    IngestJob.readRaw(spark, "/root/reference/data/raw_dockets.json"),
+    IngestJob.readRaw(spark, ReferenceCorpus.path),
     runId = 1, sourceName = "raw_dockets.json",
-    sourceUri = "/root/reference/data/raw_dockets.json", ts = ts)
+    sourceUri = ReferenceCorpus.path, ts = ts)
 
   test("summary counts match the reference semantics") {
+    ReferenceCorpus.assumePresent()
     assert(result.summary.read == 502)
     assert(result.summary.inserted == 501)
     assert(result.summary.updated == 1)
@@ -31,11 +32,13 @@ class IngestJobSpec extends AnyFunSuite {
   }
 
   test("cases: one row per case_number, last duplicate wins") {
+    ReferenceCorpus.assumePresent()
     assert(result.cases.count() == 501)
     assert(result.cases.select("case_number").distinct().count() == 501)
   }
 
   test("dim cardinalities") {
+    ReferenceCorpus.assumePresent()
     assert(result.courts.count() == 71)
     assert(result.judges.count() == 95)
     assert(result.caseTypes.count() == 4)
@@ -43,11 +46,13 @@ class IngestJobSpec extends AnyFunSuite {
   }
 
   test("case types are the lowercased set") {
+    ReferenceCorpus.assumePresent()
     val names = result.caseTypes.select("name").collect().map(_.getString(0)).toSet
     assert(names == Set("civil", "criminal", "employment", "personal injury"))
   }
 
   test("dims unique by normalized key; ids collision-free") {
+    ReferenceCorpus.assumePresent()
     def check(df: org.apache.spark.sql.DataFrame, key: String): Unit = {
       assert(df.select(key).distinct().count() == df.count())
       assert(df.select("id").distinct().count() == df.count())
@@ -59,23 +64,27 @@ class IngestJobSpec extends AnyFunSuite {
   }
 
   test("padded titles flow through untrimmed (ingest.py:632-636 quirk)") {
+    ReferenceCorpus.assumePresent()
     val padded = result.cases
       .filter(col("title") =!= trim(col("title"))).count()
     assert(padded > 0, "corpus has whitespace-padded titles that must be preserved")
   }
 
   test("court variation seen_counts sum to records that reached the court step") {
+    ReferenceCorpus.assumePresent()
     val total = result.courtVariations.agg(sum("seen_count")).collect()(0).getLong(0)
     assert(total == 502) // all 502 records validate through the court stage
   }
 
   test("every case row joins to a court dim row") {
+    ReferenceCorpus.assumePresent()
     val unmatched = result.cases.join(result.courts.select(col("id").as("court_id")),
       Seq("court_id"), "left_anti").count()
     assert(unmatched == 0)
   }
 
   test("case_parties reference valid parties and cases") {
+    ReferenceCorpus.assumePresent()
     val cp = result.caseParties
     assert(cp.join(result.parties.select(col("id").as("party_id")),
       Seq("party_id"), "left_anti").count() == 0)
@@ -86,6 +95,7 @@ class IngestJobSpec extends AnyFunSuite {
   }
 
   test("clean corpus: no quarantine, no errors") {
+    ReferenceCorpus.assumePresent()
     assert(result.quarantine.count() == 0)
     assert(result.errors.count() == 0)
   }
@@ -118,8 +128,9 @@ class IngestJobSpec extends AnyFunSuite {
   }
 
   test("re-ingesting the same file classifies everything as updated") {
+    ReferenceCorpus.assumePresent()
     val again = IngestJob.run(spark,
-      IngestJob.readRaw(spark, "/root/reference/data/raw_dockets.json"),
+      IngestJob.readRaw(spark, ReferenceCorpus.path),
       runId = 3, sourceName = "raw_dockets.json", sourceUri = "x", ts = ts,
       priorCaseNumbers = Some(result.cases.select("case_number")))
     assert(again.summary.inserted == 0)

@@ -14,16 +14,18 @@ class QualityReportSpec extends AnyFunSuite {
 
   private val ts = Timestamp.valueOf("2026-01-01 00:00:00")
   private lazy val r = IngestJob.run(spark,
-    IngestJob.readRaw(spark, "/root/reference/data/raw_dockets.json"),
+    IngestJob.readRaw(spark, ReferenceCorpus.path),
     1, "raw_dockets.json", "ref", ts)
 
   test("volume summary totals the run ledger") {
+    ReferenceCorpus.assumePresent()
     val v = QualityReport.volumeSummary(r.runLedger, None).collect()(0)
     assert(v.getLong(0) == 502 && v.getLong(1) == 501 &&
       v.getLong(2) == 1 && v.getLong(3) == 0)
   }
 
   test("completeness: 57 cases missing a judge, none missing court/type") {
+    ReferenceCorpus.assumePresent()
     val c = QualityReport.completeness(r.cases, None).collect()(0)
     assert(c.getAs[Long]("total") == 501)
     // 57 raw records have blank/title-only judges; the duplicate
@@ -34,6 +36,7 @@ class QualityReportSpec extends AnyFunSuite {
   }
 
   test("entity normalization sanity: variations collapse") {
+    ReferenceCorpus.assumePresent()
     val n = QualityReport.entityNormalization(r.judges, r.courts).collect()
       .map(row => row.getString(0) -> row).toMap
     assert(n("judges").getAs[Long]("total") == 95)
@@ -44,6 +47,7 @@ class QualityReportSpec extends AnyFunSuite {
   }
 
   test("parties coverage + role histogram") {
+    ReferenceCorpus.assumePresent()
     val cov = QualityReport.partiesCoverage(r.caseParties, r.cases).collect()(0)
     assert(cov.getAs[Long]("cases_with_parties") > 400)
     assert(cov.getAs[Long]("cases_with_plaintiff") > 0)
@@ -61,6 +65,7 @@ class QualityReportSpec extends AnyFunSuite {
   }
 
   test("render produces the report sections") {
+    ReferenceCorpus.assumePresent()
     val text = QualityReport.render(
       QualityReport.volumeSummary(r.runLedger, None),
       QualityReport.errorBreakdown(r.errors, None),

@@ -19,12 +19,13 @@ class RagPipelineSpec extends AnyFunSuite {
 
   private val ts = Timestamp.valueOf("2026-01-01 00:00:00")
   private lazy val ingest = IngestJob.run(spark,
-    IngestJob.readRaw(spark, "/root/reference/data/raw_dockets.json"),
+    IngestJob.readRaw(spark, ReferenceCorpus.path),
     1, "raw_dockets.json", "ref", ts)
   private val embedder = HashingEmbedder(64)
   private lazy val embeddings = RagPipeline.backfill(ingest.cases, None, embedder)
 
   test("backfill covers every case exactly (one chunk per short docket)") {
+    ReferenceCorpus.assumePresent()
     // docket_text is 53-128 chars (BASELINE.md) → one 1200-char chunk each
     assert(embeddings.select("case_number").distinct().count() == 501)
     assert(embeddings.count() == 501)
@@ -39,11 +40,13 @@ class RagPipelineSpec extends AnyFunSuite {
   }
 
   test("backfill with existing table only embeds missing cases") {
+    ReferenceCorpus.assumePresent()
     val delta = RagPipeline.backfill(ingest.cases, Some(embeddings), embedder)
     assert(delta.count() == 0)
   }
 
   test("search: self-query ranks the source case first with similarity 1") {
+    ReferenceCorpus.assumePresent()
     val probe = ingest.cases.select("case_number", "docket_text")
       .orderBy("case_number").limit(1).collect()(0)
     val qvec = embedder.embed(probe.getString(1))
@@ -59,6 +62,7 @@ class RagPipelineSpec extends AnyFunSuite {
   }
 
   test("search output has the reference's result columns") {
+    ReferenceCorpus.assumePresent()
     val res = RagPipeline.searchText(embeddings, ingest.cases, ingest.judges,
       ingest.courts, "breach of contract", 3, embedder)
     assert(res.columns.toSeq == Seq("case_number", "title", "filed_date",
@@ -67,6 +71,7 @@ class RagPipelineSpec extends AnyFunSuite {
   }
 
   test("batched embedding == per-row embedding") {
+    ReferenceCorpus.assumePresent()
     val chunks = RagPipeline.chunkCases(
       ingest.cases.limit(200).select("case_number", "docket_text"))
     val single = RagPipeline.embedChunks(chunks, embedder)
@@ -76,6 +81,7 @@ class RagPipelineSpec extends AnyFunSuite {
   }
 
   test("cell-probe search: self-query still found, scans one cell") {
+    ReferenceCorpus.assumePresent()
     val probe = ingest.cases.select("case_number", "docket_text")
       .orderBy("case_number").limit(1).collect()(0)
     val qvec = embedder.embed(probe.getString(1))
@@ -94,6 +100,7 @@ class RagPipelineSpec extends AnyFunSuite {
 
   test("stored chunk-ANN search: exhaustive probe equals the exact " +
     "search; narrow probe reads a pruned candidate pool") {
+    ReferenceCorpus.assumePresent()
     val store = new graft.store.SnapshotStore(spark,
       java.nio.file.Files.createTempDirectory("graft-rag-ann").toString)
     RagPipeline.indexChunks(store, embeddings, lists = 8)
@@ -125,6 +132,7 @@ class RagPipelineSpec extends AnyFunSuite {
 
   test("incremental chunk-index merge equals assigning every chunk " +
     "against the stored centroids (pgvector's insert path)") {
+    ReferenceCorpus.assumePresent()
     val storeRoot =
       java.nio.file.Files.createTempDirectory("graft-rag-inc").toString
     val store = new graft.store.SnapshotStore(spark, storeRoot)
@@ -180,6 +188,7 @@ class RagPipelineSpec extends AnyFunSuite {
 
   test("api: searchDockets through a search store probes the stored " +
     "chunk-ANN index and matches the exact path at full probe width") {
+    ReferenceCorpus.assumePresent()
     val store = new graft.store.SnapshotStore(spark,
       java.nio.file.Files.createTempDirectory("graft-rag-api-ann").toString)
     RagPipeline.indexChunks(store, embeddings, lists = 4)
@@ -196,6 +205,7 @@ class RagPipelineSpec extends AnyFunSuite {
   }
 
   test("api: listCases by judge + year filters and orders") {
+    ReferenceCorpus.assumePresent()
     val api = new GraftApi(spark, ingest.cases, ingest.judges, ingest.courts,
       ingest.caseTypes, ingest.parties, ingest.caseParties, Some(embeddings), embedder)
     val rows = api.listCases(judge = Some("Maria Rodriguez"), year = None)
@@ -210,6 +220,7 @@ class RagPipelineSpec extends AnyFunSuite {
   }
 
   test("api: listCases year filter prunes snapshot partitions") {
+    ReferenceCorpus.assumePresent()
     // persist cases the way GraftCli does (hive-partitioned by
     // filed_year) and assert the year path reads ONE year directory:
     // the pruning evidence lives in the scan's PartitionFilters, same
@@ -250,6 +261,7 @@ class RagPipelineSpec extends AnyFunSuite {
   }
 
   test("api: getCase + getParties") {
+    ReferenceCorpus.assumePresent()
     val api = new GraftApi(spark, ingest.cases, ingest.judges, ingest.courts,
       ingest.caseTypes, ingest.parties, ingest.caseParties, Some(embeddings), embedder)
     val detail = api.getCase("1:23-cv-12345")
@@ -263,6 +275,7 @@ class RagPipelineSpec extends AnyFunSuite {
   }
 
   test("api: searchDockets returns k results") {
+    ReferenceCorpus.assumePresent()
     val api = new GraftApi(spark, ingest.cases, ingest.judges, ingest.courts,
       ingest.caseTypes, ingest.parties, ingest.caseParties, Some(embeddings), embedder)
     val res = api.searchDockets("motion for summary judgment", 4)
